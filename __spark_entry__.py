@@ -736,13 +736,11 @@ def _q_turn_pairs_disorder_streamed(spark, sf):
     )
 
 
-# NOTE: a transformWithState (Spark 4 StatefulProcessor) form of the
-# matcher exists at streaming/matcher_tws.py with the same oracle-exact
-# semantics (parity.streamed_turn_pairs_tws); it is NOT registered as a
-# driver query because the TWS state-server protocol needs the protobuf
-# runtime, which this sandbox does not ship (no installs allowed). The
-# pytest parity test auto-skips on missing protobuf and runs on any
-# real cluster (tests/test_streaming.py::test_tws_matcher_parity).
+# Both matcher drains run the same fold (streaming/matcher.matcher_fold)
+# through one of the two drivers in streaming/cep.py: the ordered driver
+# for in-order sources (turn_pairs_streamed) and the replay driver for
+# disorder (turn_pairs_disorder_streamed). Every CEP pattern — turn
+# pairs, tool transitions, error bursts — is one fold run this way.
 
 
 def _q_snapshot_streamed(spark, sf):

@@ -827,55 +827,6 @@ def streamed_latency_quantiles(
     )
 
 
-def streamed_turn_pairs_tws(
-    spark: SparkSession, sf_dir: str, cfg: EngineConfig = DEFAULT
-) -> DataFrame:
-    """Drain the transformWithState matcher (streaming/matcher_tws.py)
-    over the sliced driver input — the SAME oracle as turn_pairs /
-    turn_pairs_streamed, proving the two stateful APIs are semantically
-    interchangeable. RocksDB provider is set for the drain (Spark
-    requires it for transformWithState) and restored after."""
-    from stellar_etl_spark.deploy import ship_package
-    from stellar_etl_spark.streaming.matcher_tws import (
-        ROCKSDB_PROVIDER,
-        match_pairs_stream_tws,
-    )
-
-    ship_package(spark)
-    src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_pairs_tws_")
-    parity_cfg = EngineConfig(
-        session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
-    )
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=1, with_lineage=False
-    )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        with _drain_conf(spark):
-            q = (
-                match_pairs_stream_tws(stream, parity_cfg)
-                .writeStream.queryName("parity_pairs_tws")
-                .outputMode("append")
-                .format("parquet")
-                .option("path", os.path.join(work, "out"))
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-    return spark.read.parquet(os.path.join(work, "out")).filter(
-        F.col("conv_id") != CLOSER_CONV
-    )
-
-
 CMS_TABLE = "cms_counters"
 
 

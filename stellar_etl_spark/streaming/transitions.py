@@ -1,9 +1,9 @@
 """Streaming first-order tool-transition detection — the CEP shape of
 operators/journeys.tool_transitions: per conversation, each tool turn
 emits the (previous tool -> tool) bigram the moment it arrives, with
-'__start__' marking the first tool use. A per-conversation ValueState
-(last tool + replay high-water mark) carries the pattern context
-across micro-batches, so a bigram that straddles a batch boundary is
+'__start__' marking the first tool use. The fold's carry (the last
+tool) rides in the ordered driver's state (streaming/cep.py) across
+micro-batches, so a bigram that straddles a batch boundary is
 detected exactly like one inside a batch.
 
 This is the simplest instance of the engine's CEP pattern family: the
@@ -14,8 +14,8 @@ mergeable partial counts (SUM) through the exactly-once epoch sink —
 the same partial-aggregate discipline as the streamed quantile
 histogram and CMS.
 
-Scale notes (100 TB): state is one (int, string) row per conversation
-seen — for bounded state under unbounded conversation churn, arm the
+Scale notes (100 TB): state is one (max_idx, last_ts_us, carry) row per
+conversation seen — for bounded state under unbounded conversation churn, arm the
 same EventTimeTimeout the matcher uses (evicting last_tool only
 forgets context for a conversation idle past the watermark; its next
 tool turn re-enters as '__start__', the standard CEP session-reset
@@ -30,12 +30,11 @@ checkpointed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
+
+from stellar_etl_spark.streaming.cep import ordered_stream
 
 TRANS_OUTPUT_SCHEMA = T.StructType(
     [
@@ -46,67 +45,29 @@ TRANS_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-TRANS_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("max_idx", T.IntegerType()),
-        T.StructField("last_tool", T.StringType()),
-    ]
-)
-
 START = "__start__"
 
 
-def _trans_fn(
-    key: tuple,
-    pdf_iter: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (conv_id,) = key
-    max_idx, last_tool = (-1, None)
-    if state.exists:
-        max_idx, last_tool = state.get
-
-    out: list[tuple] = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("turn_idx")
-        idxs = pdf["turn_idx"].to_numpy()
-        tools = pdf["tool"].to_numpy()
-        for i in range(len(pdf)):
-            if idxs[i] <= max_idx:
-                continue  # replayed row: drop (idempotence)
-            max_idx = int(idxs[i])
-            out.append(
-                (conv_id, last_tool if last_tool is not None else START,
-                 tools[i], max_idx)
-            )
-            last_tool = tools[i]
-
-    state.update((max_idx, last_tool))
-    if out:
-        cols = list(zip(*out))
-        yield pd.DataFrame(
-            {
-                "conv_id": pd.array(cols[0], dtype="string"),
-                "prev_tool": pd.array(cols[1], dtype="string"),
-                "tool": pd.array(cols[2], dtype="string"),
-                "turn_idx": pd.array(cols[3], dtype="Int32"),
-            }
-        )
+def transitions_fold(
+    conv_id: str, rows: list, carry: dict, closing: bool
+) -> tuple[list, dict]:
+    """Adjacency bigrams over the tool-bearing subsequence, START-marked.
+    Carry: the last tool."""
+    last = carry.get("lt")
+    out: list = []
+    for idx, _role, tool, _err, _ts in rows:
+        if tool is None:
+            continue
+        out.append((conv_id, last if last is not None else START, tool, idx))
+        last = tool
+    return out, ({} if last is None else {"lt": last})
 
 
 def tool_transitions_stream(df: DataFrame) -> DataFrame:
     """Append-mode bigram emission over the tool-bearing turn stream.
-    Input: a streaming DataFrame already filtered to tool IS NOT NULL
-    (the filter stays outside so the watermark column choice is the
-    caller's)."""
-    return (
-        df.select("conv_id", "turn_idx", "tool")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _trans_fn,
-            TRANS_OUTPUT_SCHEMA,
-            TRANS_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    Input: a streaming transcript DataFrame already filtered to tool IS
+    NOT NULL (the filter stays outside so the watermark column choice is
+    the caller's)."""
+    return ordered_stream(
+        df, transitions_fold, TRANS_OUTPUT_SCHEMA, GroupStateTimeout.NoTimeout
     )

@@ -257,3 +257,19 @@ def test_ooo_matcher_monotonicity_violation_still_exact(spark, tmp_path):
     assert _rows(got, ["user_turn_idx", "response_turn_idx"]) == [
         (0, 1), (2, 3), (4, None)
     ]
+
+
+def test_disorder_inputs_satisfy_unique_idx_precondition(spark):
+    """The drivers' exactness needs (conv_id, turn_idx) unique
+    (streaming/cep.py module doc); both delivery orders these tests
+    drain — the reversed and the shuffled copy of the sliced input —
+    must satisfy it, or a pass above could rest on a duplicate-idx
+    tie-break instead of the replay."""
+    from stellar_etl_spark.streaming.source import read_transcript_batch
+
+    for mode in ("reverse", "shuffle"):
+        src_dir = parity.disorder_dir(spark, SF_UNIT, mode)
+        turns = read_transcript_batch(spark, src_dir)
+        assert turns.count() > 0
+        dups = turns.groupBy("conv_id", "turn_idx").count().filter(F.col("count") > 1)
+        assert dups.count() == 0, src_dir

@@ -26,23 +26,24 @@ def _hard_kill(q):
     """Stop a stream mid-batch, simulating the driver dying. The stop
     interrupt can race micro-batch planning inside MicroBatchExecution
     and make awaitTermination report the dying query as STREAM_FAILED
-    (root cause `java.lang.InterruptedException`, but the Python-side
-    message carries only `SQLSTATE: XXKST`, so the cause chain is not
-    string-matchable). For a DELIBERATE kill any such terminal report
-    IS the simulated crash: the checkpoint is intact by construction
-    (commits are atomic), and whether the kill corrupted anything is
-    exactly what each kill/resume test's post-resume equality
-    assertions then verify. Only the stream's own terminal report
-    (StreamingQueryException) is swallowed; anything else — including
-    raw Py4J JVM errors, which would mask a genuine foreachBatch or
-    writer bug — still raises."""
+    (root cause `java.lang.InterruptedException`; the Python side sees
+    `SQLSTATE: XXKST`). For a DELIBERATE kill that report IS the
+    simulated crash: the checkpoint is intact by construction (commits
+    are atomic), and whether the kill corrupted anything is exactly
+    what each kill/resume test's post-resume equality assertions then
+    verify. Only that stop race is swallowed: an XXKST report for a
+    query that was still running when the stop was issued. A query
+    that had already failed on its own (a foreachBatch or writer bug
+    also reports XXKST) and any other error still raise."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    failed_before_stop = q.exception() is not None
     q.stop()
     try:
         q.awaitTermination(60)
-    except StreamingQueryException:
-        pass
+    except StreamingQueryException as e:
+        if failed_before_stop or e.getSqlState() != "XXKST":
+            raise
 
 from stellar_etl_spark.streaming.pipeline import start_fanout, start_windowed
 from stellar_etl_spark.streaming.sink import EpochCommitSink
@@ -593,34 +594,6 @@ def test_snapshot_fold_survives_compaction(spark, data_dir, tmp_path):
     assert sink.vacuum() > 0
     after = _rows(read_final_snapshot(spark, str(tmp_path / "sink")))
     assert after == before
-
-
-def test_tws_matcher_parity(spark, tmp_path):
-    """transformWithState matcher == batch matcher on the same input
-    (J1 across both stateful APIs), FULL-row parity — matched rows AND
-    the handleExpiredTimer eviction rows (the round-3 gap: only
-    non-evicted rows were compared, leaving the timer path unchecked).
-    Uses the parity construction (closer sentinels + huge delay,
-    streaming/parity.streamed_turn_pairs_tws) so the final watermark
-    deterministically fires every pending timer, exactly like the
-    driver-gated classic matcher. Skips where the TWS state-server
-    protocol's protobuf runtime is absent (this sandbox); runs
-    unmodified on a real Spark 4 cluster."""
-    pytest.importorskip("google.protobuf")
-    from stellar_etl_spark.streaming.parity import streamed_turn_pairs_tws
-    from stellar_etl_spark.sources.transcripts import load_transcripts
-    from tests.conftest import SF_UNIT
-
-    got = streamed_turn_pairs_tws(spark, SF_UNIT)
-    batch = batch_pairs.match_pairs(load_transcripts(spark, SF_UNIT))
-    cols = ["conv_id", "user_turn_idx", "response_turn_idx", "response_role",
-            "response_tool", "evicted_unmatched"]
-    got_all = _rows(got, cols)
-    assert got_all == _rows(batch, cols)
-    # both paths must be non-trivially exercised
-    n_evicted = sum(1 for r in got_all if r[-1])
-    assert n_evicted > 0, "no eviction rows — timer path not exercised"
-    assert len(got_all) - n_evicted > 100
 
 
 def test_transitions_resume_preserves_pattern_state(spark, data_dir, tmp_path):
@@ -1398,3 +1371,30 @@ def test_ngram_lm_resume_absorbs_replayed_epochs(spark, tmp_path):
     # exactly-once roster: one doc row per corpus doc
     n_docs = load_corpus(spark, SF_UNIT).count()
     assert sink.read_table(spark, parity.LM_DOCS_TABLE).count() == n_docs
+
+
+def test_hard_kill_reraises_non_stop_failure(spark, tmp_path):
+    """_hard_kill swallows only the stop race: a query that died of its
+    own failure — here a foreachBatch that raises — is re-raised, so a
+    kill/resume test cannot hide a writer bug behind the kill."""
+    import time
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    def failing_writer(bdf, eid):
+        raise RuntimeError("injected foreachBatch failure")
+
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 10).load()
+        .writeStream.queryName("hard_kill_failure")
+        .foreachBatch(failing_writer)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    deadline = time.time() + 120
+    while q.isActive and time.time() < deadline:
+        time.sleep(0.2)
+    assert not q.isActive, "the failing query did not terminate"
+    with pytest.raises(StreamingQueryException) as err:
+        _hard_kill(q)
+    assert "injected foreachBatch failure" in str(err.value)
